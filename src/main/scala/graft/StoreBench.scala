@@ -22,7 +22,7 @@ object StoreBench {
     spark.sparkContext.setLogLevel("ERROR")
     val dir = graft.TempDirs.scratch("graft-store-bench-")
     val store = new EventStore(spark, dir)
-    // warm once: first append pays Hadoop FS + parquet writer classload
+    // warm once: first append pays parquet writer classload + codec init
     StoreLoad.run(store, seconds = 1.0)
     // Absolute-cost contention sentinel (r17 verdict item 2): the same
     // pinned per-core compute probe graft.Bench runs (Bench.scala

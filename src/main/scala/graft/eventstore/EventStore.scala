@@ -678,8 +678,10 @@ class EventStore(val spark: SparkSession, rootDir: String,
     * lists it). Small batches are written driver-locally with no Spark
     * job (LocalParquet — the reference's append is a plain file write
     * with a p95 < 50 ms envelope, load/post-event.js:7-11; a per-append
-    * Spark job would spend 100-300 ms scheduling before the first byte);
-    * large batches go through executors. */
+    * Spark job would spend 100-300 ms scheduling before the first byte).
+    * The local writer creates exactly the temp file and nothing beside
+    * it (no checksum sidecar), so after the move the stream directory
+    * gains only `target`. Large batches go through executors. */
   private def writeBatchFile(target: Path, rows: Seq[StoredEvent]): Unit =
     if (rows.size <= EventStore.LocalWriteMax) {
       val tmp = Files.createTempFile(target.getParent, ".commit-", ".tmp")
@@ -744,8 +746,12 @@ class EventStore(val spark: SparkSession, rootDir: String,
     * job per point read pays 100-600 ms of scheduling first. The same
     * manifest-listed files are read either way (never a glob), and each
     * file carries row-group revision stats, so the local filter prunes
-    * exactly like the executor scan. Analytical reads (readStream /
-    * userEvents) keep the Spark path. */
+    * exactly like the executor scan. The local cost is about 1 ms (on
+    * 4 vCPUs) per file whose name-declared revision range overlaps the
+    * request: a point read opens one file, but a page over an
+    * uncompacted stream of single-event appends opens one file per
+    * event. Analytical reads (readStream / userEvents) keep the Spark
+    * path. */
   def query(u: String, s: String, start: Long, limit: Int)
       : Seq[CloudEvent] = {
     if (limit <= 0) return Nil
@@ -941,7 +947,9 @@ class EventStore(val spark: SparkSession, rootDir: String,
     * predecessor — older generations protect in-flight readers) and
     * older than the grace window (protecting in-flight commits that have
     * written data but not yet linked their manifest). Manifests below
-    * the kept suffix are pruned too. */
+    * the kept suffix are pruned too, and so are the hidden `.crc`
+    * checksum files that earlier versions of the driver-local writer
+    * left beside every append (never referenced by any manifest). */
   private def gcStream(dir: Path, graceMs: Long): Unit = {
     val versions = listDir(dir).flatMap(p => p.getFileName.toString match {
       case ManifestFile(v) => Some(v.toLong)
@@ -971,7 +979,8 @@ class EventStore(val spark: SparkSession, rootDir: String,
     dataFiles.foreach { p =>
       val name = p.getFileName.toString
       val deletable =
-        (name.endsWith(".parquet") || name.endsWith(".keys")) &&
+        (name.endsWith(".parquet") || name.endsWith(".keys") ||
+          (name.startsWith(".") && name.endsWith(".crc"))) &&
           !referenced(name) &&
           Files.getLastModifiedTime(p).toMillis < cutoff
       if (deletable) Files.deleteIfExists(p)
@@ -1158,7 +1167,6 @@ object EventStore {
     case _ => None
   }
 
-  private[eventstore] val BatchFile = """batch-(\d+)-(\d+)-.*\.parquet""".r
   private[eventstore] val ManifestFile = """manifest-(\d+)\.log""".r
 
   private[eventstore] def manifestName(v: Long) = f"manifest-$v%020d.log"

@@ -1,11 +1,14 @@
 package graft.eventstore
 
 import java.nio.file.Path
-import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter,
+  GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -24,6 +27,12 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   * (both decode to TimestampType, and files of both kinds coexist in one
   * stream). Row-group stats on `revision` still come for free, so the
   * positional-scan pruning is unchanged.
+  *
+  * Files are opened through parquet's own java.nio `LocalInputFile` /
+  * `LocalOutputFile`, not Hadoop's FileSystem: a Hadoop-path reader
+  * parses the default configuration XML on every build (~9 ms), and
+  * Hadoop's local FileSystem forks a `chmod` process per written file
+  * and writes a `.crc` checksum file beside it.
   */
 object LocalParquet {
 
@@ -54,21 +63,16 @@ object LocalParquet {
   private def micros(t: java.sql.Timestamp): Long =
     t.getTime * 1000L + (t.getNanos % 1000000L) / 1000L
 
-  // Configuration construction costs milliseconds; reads AND writes
-  // share one each (Configuration is thread-safe for reads, and
-  // nothing mutates these). r07: writeBatch used to build TWO fresh
-  // Configurations per append — several ms of pure constructor cost on
-  // the hot path the 50ms SLO budgets.
-  private val readConf = new Configuration(false)
-  private val writeConf = new Configuration(false)
+  // Plain (not Hadoop) configuration, empty: every option is parquet's
+  // default, and neither the reader nor the writer mutates it.
+  private val conf = new PlainParquetConfiguration()
 
   /** Write the batch as one snappy parquet file at `target` (which must
     * not exist — callers go through the store's temp+move protocol). */
   def writeBatch(target: Path, rows: Seq[StoredEvent]): Unit = {
     val writer = ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(new org.apache.hadoop.fs.Path(target.toUri), writeConf))
-      .withConf(writeConf)
+      .builder(new LocalOutputFile(target))
+      .withConf(conf)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withType(schema)
       .build()
@@ -121,19 +125,16 @@ object LocalParquet {
   def readRange(file: Path, start: Long, end: Long): Seq[StoredEvent] = {
     import org.apache.parquet.filter2.compat.FilterCompat
     import org.apache.parquet.filter2.predicate.FilterApi
-    import org.apache.parquet.hadoop.ParquetReader
-    import org.apache.parquet.hadoop.example.GroupReadSupport
     if (end <= start) return Nil
     val rev = FilterApi.longColumn("revision")
     val pred = FilterApi.and(
       FilterApi.gtEq(rev, java.lang.Long.valueOf(start)),
       FilterApi.lt(rev, java.lang.Long.valueOf(end)))
-    val reader = ParquetReader
-      .builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(file.toUri))
-      .withConf(readConf) // shared: Configuration init is ~ms, per-read
-      .withFilter(FilterCompat.get(pred))
-      .build()
+    val builder = new ParquetReader.Builder[Group](
+        new LocalInputFile(file), conf) {
+      override def getReadSupport() = new GroupReadSupport()
+    }
+    val reader = builder.withFilter(FilterCompat.get(pred)).build()
     val out = Seq.newBuilder[StoredEvent]
     try {
       var g = reader.read()

@@ -2,6 +2,7 @@ package graft.eventstore
 
 import graft.SparkSuite
 import graft.functions.Base32
+import scala.jdk.CollectionConverters._
 
 /** Mirrors the reference's storage-engine unit tests (src/db.rs:269-396:
   * roundtrip, empty read, the CAS matrix, 199-append positional read)
@@ -301,5 +302,29 @@ class EventStoreSpec extends SparkSuite {
       assert(es.revision("u1", s"stream-$t") == 5)
       assert(es.query("u1", s"stream-$t", 0, 10).size == 5)
     }
+  }
+
+  test("single-event appends leave no orphaned file: every file in the " +
+      "stream directory is a manifest or a file the head manifest lists") {
+    val root = tempDir("es-orphans-")
+    val es = new EventStore(spark, root)
+    (0 until 50).foreach(i => es.append("u1", "s1", Seq(ev(s"e-$i"))))
+    val dir = java.nio.file.Paths.get(root, Base32.encodeString("u1"),
+      Base32.encodeString("s1"))
+    val names = {
+      val ls = java.nio.file.Files.list(dir)
+      try ls.iterator().asScala.map(_.getFileName.toString).toList
+      finally ls.close()
+    }
+    val (manifests, others) = names.partition {
+      case EventStore.ManifestFile(_) => true
+      case _ => false
+    }
+    assert(manifests.size == 50)
+    val head = EventStore.parseManifest(dir.resolve(manifests.max))
+    assert(head.revision == 50)
+    assert(others.sorted == (head.files ++ head.keyFiles).sorted,
+      s"files beside the manifests that the head does not list: " +
+        others.filterNot((head.files ++ head.keyFiles).toSet))
   }
 }

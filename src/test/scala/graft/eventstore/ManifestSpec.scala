@@ -109,6 +109,32 @@ class ManifestSpec extends SparkSuite {
     assert(store.query("u1", "s1", 0, 100).size == 3)
   }
 
+  test("GC sweeps the hidden .crc files older stores left per append, " +
+      "under the grace window, and never touches in-flight temp files") {
+    val root = tempDir("crc-gc-")
+    val store = new EventStore(spark, root)
+    store.append("u1", "s1", Seq(ev("e-0")))
+    store.append("u1", "s1", Seq(ev("e-1")))
+    val streamDir = onlyStreamDir(root)
+    def plant(name: String, mtime: Long): Path = {
+      val p = Files.write(streamDir.resolve(name), Array[Byte](1, 2, 3))
+      Files.setLastModifiedTime(p,
+        java.nio.file.attribute.FileTime.fromMillis(mtime))
+      p
+    }
+    val longAgo = System.currentTimeMillis() - 3600000L
+    val oldCrc = plant("..commit-1234567890.tmp.crc", longAgo)
+    val youngCrc = plant("..commit-9876543210.tmp.crc",
+      System.currentTimeMillis())
+    val inFlight = Seq(plant(".manifest-1234567890.tmp", longAgo),
+      plant(".keys-1234567890.tmp", longAgo))
+    assert(store.compactStream("u1", "s1", graceMs = 60000L) == 2)
+    assert(!Files.exists(oldCrc))
+    assert(Files.exists(youngCrc), "a file inside the grace window survives")
+    inFlight.foreach(p => assert(Files.exists(p), s"$p was deleted"))
+    assert(store.query("u1", "s1", 0, 10).map(_.id) == Seq("e-0", "e-1"))
+  }
+
   test("superseded files are garbage-collected after one further " +
       "generation (deferred deletion for in-flight readers)") {
     val root = tempDir("gc-")

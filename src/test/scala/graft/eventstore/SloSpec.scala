@@ -14,8 +14,8 @@ class SloSpec extends SparkSuite {
   test("mixed sustained load: append p95 < 50ms, error rate < 1%, " +
       "every committed offset readable while appends continue") {
     val store = new EventStore(spark, tempDir("slo-"))
-    // warm: the very first append pays one-time Hadoop/parquet
-    // classloading that a service pays at boot, not per-request
+    // warm: the very first append pays one-time parquet classloading
+    // and codec init that a service pays at boot, not per-request
     StoreLoad.run(store, seconds = 1.0)
     // In-suite this JVM inherits hundreds of MB of garbage from the
     // Spark suites that ran before it; a GC pause landing inside the
